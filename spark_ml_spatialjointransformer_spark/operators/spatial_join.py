@@ -66,7 +66,7 @@ from spark_ml_spatialjointransformer_spark.functions.geometry import (
     centroid,
     parse_wkt,
     point_geom,
-    point_in_polygon_np,
+    points_in_polygons_np,
     polygon_predicate_np,
     rect_predicate_np,
 )
@@ -134,10 +134,13 @@ def _refine_udf(op: str, l_is_wkt: bool = True, r_is_wkt: bool = True):
 
     Fast path: when one side is raw points and the other a polygon WKT and
     the predicate reduces to point-in-polygon (within / contains /
-    intersects), the batch is grouped by the polygon value and evaluated as
-    a vectorized numpy ray-cast — O(edges) vector passes per distinct
-    polygon instead of a Python call per pair (the broadcast side repeats
-    heavily, so distinct polygons per batch ≪ rows)."""
+    intersects), the batch is factorized by the WKT value once, each
+    distinct WKT is parsed once, and every polygon pair goes through one
+    whole-batch ray cast (``points_in_polygons_np``): large groups run the
+    per-polygon kernel on a contiguous slice, the rest share one vector
+    sweep over their rings' edges, so the cost no longer grows with rows ×
+    distinct polygons.  NaN points and unparseable WKT are False; points
+    against non-polygon WKT take the scalar ``PREDICATE_FUNCS`` path."""
 
     fn = PREDICATE_FUNCS[op]
     # (points are on the left?) and the strictness the op implies
@@ -175,29 +178,28 @@ def _refine_udf(op: str, l_is_wkt: bool = True, r_is_wkt: bool = True):
 
         n = len(l_wkt)
         if pip_dir is not None and n:
-            # point_in_polygon_np is a module-top import: an import statement
-            # INSIDE this worker-side body would require the package on the
-            # executor PYTHONPATH, defeating ensure_udf_portability
+            # points_in_polygons_np is a module-top import: an import
+            # statement INSIDE this worker-side body would require the
+            # package on the executor PYTHONPATH, defeating
+            # ensure_udf_portability
             px = (l_x if pip_dir == "l" else r_x).to_numpy(dtype=np.float64)
             py = (l_y if pip_dir == "l" else r_y).to_numpy(dtype=np.float64)
             poly_wkt = r_wkt if pip_dir == "l" else l_wkt
-            out = np.zeros(n, dtype=bool)
-            valid = ~(np.isnan(px) | np.isnan(py))
-            for w in poly_wkt.unique():
-                g = geom(w, None, None)
-                mask = (poly_wkt == w).to_numpy() & valid
-                if g is None or not mask.any():
-                    continue
-                if g.kind == "polygon":
-                    res = point_in_polygon_np(px[mask], py[mask], g)
-                    out[mask] = np.isin(res, pip_ok)
-                else:  # point × line etc. — scalar fallback for this group
-                    idxs = np.nonzero(mask)[0]
-                    for i in idxs:
-                        p = point_geom(float(px[i]), float(py[i]))
-                        out[i] = bool(
-                            fn(p, g) if pip_dir == "l" else fn(g, p)
-                        )
+            codes, uniques = pd.factorize(poly_wkt)
+            geoms = [parse_wkt(w) for w in uniques]
+            # kind per code, plus a trailing None that code -1 reads
+            kinds = [g.kind if g is not None else None for g in geoms] + [None]
+            is_poly = np.array([k == "polygon" for k in kinds])
+            is_other = np.array([k not in ("polygon", None) for k in kinds])
+            codes[np.isnan(px) | np.isnan(py)] = -1
+            poly = is_poly[codes]
+            res = points_in_polygons_np(px, py, np.where(poly, codes, -1), geoms)
+            out = np.isin(res, pip_ok)
+            # point × line etc. — scalar fallback for those pairs
+            for i in np.flatnonzero(is_other[codes]):
+                g = geoms[codes[i]]
+                p = point_geom(float(px[i]), float(py[i]))
+                out[i] = bool(fn(p, g) if pip_dir == "l" else fn(g, p))
             return pd.Series(out)
 
         # general WKT×WKT path.  Axis-aligned rectangles (bboxes, tiles —

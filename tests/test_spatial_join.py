@@ -446,6 +446,59 @@ def test_null_geometry_dropped(spark):
     assert collect_sorted(out) == [("i1", 1.4, 1.4, "d1")]
 
 
+@pytest.mark.parametrize(
+    "predicate, broadcast",
+    [("within", "dataset"), ("intersects", "dataset"), ("contains", "input")],
+)
+def test_point_wkt_refine_matches_scalar_predicates(spark, predicate, broadcast):
+    """Points × WKT zones through the whole-batch refine equal the scalar
+    ``PREDICATE_FUNCS`` on every pair of the cross product.  The zones mix
+    a POLYGON with a hole, a MULTIPOLYGON (one part inside another's hole),
+    a LINESTRING (the scalar fallback inside a mixed batch), a null and a
+    garbage WKT; grid points land on vertices and edges.  ``contains`` runs
+    with the WKT side iterated."""
+    from spark_ml_spatialjointransformer_spark.functions.geometry import (
+        PREDICATE_FUNCS,
+        parse_wkt,
+        point_geom,
+    )
+
+    zones = [
+        ("z1", "POLYGON((0 0,4 0,4 4,0 4,0 0),(1 1,3 1,3 3,1 3,1 1))"),
+        ("z2", "MULTIPOLYGON(((0 0,4 0,4 4,0 4,0 0),(1 1,3 1,3 3,1 3,1 1)),"
+               "((1.5 1.5,2.5 1.5,2.5 2.5,1.5 2.5,1.5 1.5)),((5 5,7 5,6 7,5 5)))"),
+        ("z3", "LINESTRING(0 2,3 2,3 5)"),
+        ("z4", None),
+        ("z5", "POLYGON((0 0,9 0,9 9"),
+        ("z6", "POLYGON((2 2,6 2,6 6,2 6,2 2))"),
+    ]
+    pts = [(f"p{i}_{j}", i * 0.5, j * 0.5) for i in range(-1, 16) for j in range(-1, 16)]
+    t = (
+        make_transformer(wkt_poi_df(spark, zones), name="refine_zones")
+        .setDatasetPoint("")
+        .setDatasetWKT("wkt")
+        .setPredicate(predicate)
+        .setBroadcast(broadcast)
+    )
+    out = t.transform(input_df(spark, pts + [("pnull", None, 1.0)]))
+    got = {(r["id"], r["poi_id"]) for r in out.collect()}
+
+    fn = PREDICATE_FUNCS[predicate]
+    expected = set()
+    for zid, wkt in zones:
+        zone = parse_wkt(wkt)
+        if zone is None:
+            continue
+        for pid, x, y in pts:
+            p = point_geom(x, y)
+            # iterated.predicate(broadcast): the points are iterated when
+            # the dataset is broadcast, the zones otherwise
+            if fn(p, zone) if broadcast == "dataset" else fn(zone, p):
+                expected.add((pid, zid))
+    assert {z for _, z in expected} == {"z1", "z2", "z3", "z6"}
+    assert got == expected
+
+
 def test_withindist_zero_radius_rejected(spark):
     """'withindist' with no/zero radius parses to radius 0 (reference
     parity, SpatialJoin.scala:72-80) — joining at radius 0 is rejected at

@@ -1,6 +1,9 @@
 """Spark-free unit tests: string toolbox, predicate parsing, geodesic
 kernels, geometry kernels."""
 
+import math
+import time
+
 import numpy as np
 import pytest
 
@@ -133,6 +136,12 @@ class TestWktParse:
         geom = g.parse_wkt("POINT(1.5e1 -2.5E-1)")
         assert geom.coords_flat() == [(15.0, -0.25)]
 
+    def test_fortran_exponents(self):
+        geom = g.parse_wkt("POINT(1.5D1 -2.5d-1)")
+        assert geom.coords_flat() == [(15.0, -0.25)]
+        ring = g.parse_wkt("POLYGON((0 0,1D1 0,1d1 1.0D+1,0 0))").parts[0][0]
+        assert ring == [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 0.0)]
+
 
 class TestGeometryPredicates:
     def test_point_in_polygon_strictness(self):
@@ -191,6 +200,144 @@ class TestGeometryPredicates:
         assert g.overlaps(a, b)
         crossing = g.parse_wkt("LINESTRING(1 -1,1 1)")
         assert not g.overlaps(a, crossing)  # point contact, not 1-D overlap
+
+
+class TestPointsInPolygons:
+    """``points_in_polygons_np`` (the refine layer's whole-batch ray cast)
+    equals the scalar ``point_in_polygon`` pair by pair, whatever the pair
+    order, batch cut or split between its two paths."""
+
+    WKT = [
+        # two holes
+        "POLYGON((0 0,6 0,6 6,0 6,0 0),(1 1,3 1,3 3,1 3,1 1),(4 4,5 4,5 5,4 5,4 4))",
+        # part 2 sits inside part 1's hole: (2, 2) is in the hole and in part 2
+        "MULTIPOLYGON(((0 0,4 0,4 4,0 4,0 0),(1 1,3 1,3 3,1 3,1 1)),"
+        "((1.5 1.5,2.5 1.5,2.5 2.5,1.5 2.5,1.5 1.5)))",
+        # overlapping parts, the second with a hole over the overlap
+        "MULTIPOLYGON(((0 0,3 0,3 3,0 3,0 0)),"
+        "((2 2,5 2,5 5,2 5,2 2),(2.5 2.5,3.5 2.5,3.5 3.5,2.5 3.5,2.5 2.5)))",
+        # a hole that crosses the shell (invalid, but parsed as given)
+        "POLYGON((0 0,4 0,4 4,0 4,0 0),(3 3,6 3,6 6,3 6,3 3))",
+        # concave, with horizontal and vertical edges
+        "POLYGON((0 0,5 0,2.5 2.5,5 5,0 5,0 0))",
+        # octagon with diagonal edges through grid points
+        "POLYGON((1 0,2 0,3 1,3 2,2 3,1 3,0 2,0 1,1 0))",
+        # 24-vertex star
+        "POLYGON(("
+        + ",".join(
+            f"{3 + (2.5 if k % 2 == 0 else 1.0) * math.cos(k * math.pi / 12):.3f} "
+            f"{3 + (2.5 if k % 2 == 0 else 1.0) * math.sin(k * math.pi / 12):.3f}"
+            for k in list(range(24)) + [0]
+        )
+        + "))",
+    ]
+
+    @classmethod
+    def _pairs(cls, n=6000, seed=11):
+        rng = np.random.default_rng(seed)
+        geoms = [g.parse_wkt(w) for w in cls.WKT]
+        # points on a 0.5 grid land on vertices and edges; polygon 0 takes
+        # half the pairs, so the default split sends it to its own slice
+        px = rng.integers(-2, 14, n) * 0.5
+        py = rng.integers(-2, 14, n) * 0.5
+        codes = np.where(rng.random(n) < 0.5, 0, rng.integers(0, len(geoms), n))
+        px[rng.random(n) < 0.02] = np.nan
+        py[rng.random(n) < 0.02] = np.nan
+        codes[rng.random(n) < 0.05] = -1
+        return px, py, codes, geoms
+
+    @staticmethod
+    def _scalar(px, py, codes, geoms):
+        return np.array(
+            [
+                -1 if c < 0 else g.point_in_polygon(x, y, geoms[c])
+                for x, y, c in zip(px, py, codes)
+            ],
+            dtype=np.int8,
+        )
+
+    def test_matches_scalar(self):
+        px, py, codes, geoms = self._pairs()
+        assert max(np.bincount(codes[codes >= 0])) >= g.PIP_GROUP_MIN_PAIRS
+        exp = self._scalar(px, py, codes, geoms)
+        assert set(exp) == {-1, 0, 1}
+        got = g.points_in_polygons_np(px, py, codes, geoms)
+        assert got.dtype == np.int8
+        np.testing.assert_array_equal(got, exp)
+
+    def test_hole_and_part_precedence(self):
+        geoms = [g.parse_wkt(w) for w in self.WKT[:3]]
+        px = np.array([2.0, 2.0, 0.5, 2.0, 1.5, 2.75, 2.25, 4.0])
+        py = np.array([2.0, 2.0, 0.5, 1.0, 2.0, 2.75, 2.25, 4.0])
+        codes = np.array([0, 1, 1, 1, 1, 2, 2, 2])
+        # in a hole; in part 1's hole and inside part 2; in part 1; on the
+        # hole boundary; on part 2's boundary; in part 1 though in part 2's
+        # hole; in both parts; in part 2 only
+        exp = np.array([-1, 1, 1, 0, 0, 1, 1, 1], dtype=np.int8)
+        np.testing.assert_array_equal(self._scalar(px, py, codes, geoms), exp)
+        for lim in (0, math.inf):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(g, "PIP_GROUP_MIN_PAIRS", lim)
+                np.testing.assert_array_equal(
+                    g.points_in_polygons_np(px, py, codes, geoms), exp
+                )
+
+    @pytest.mark.parametrize("lim", [0, 1, 64, math.inf])
+    def test_invariant_to_split_order_and_cut(self, lim, monkeypatch):
+        px, py, codes, geoms = self._pairs(n=3000, seed=5)
+        exp = self._scalar(px, py, codes, geoms)
+        monkeypatch.setattr(g, "PIP_GROUP_MIN_PAIRS", lim)
+        np.testing.assert_array_equal(g.points_in_polygons_np(px, py, codes, geoms), exp)
+        perm = np.random.default_rng(1).permutation(len(px))
+        np.testing.assert_array_equal(
+            g.points_in_polygons_np(px[perm], py[perm], codes[perm], geoms), exp[perm]
+        )
+        cuts = [0, 1, 700, 701, 2000, len(px)]
+        parts = [
+            g.points_in_polygons_np(px[a:b], py[a:b], codes[a:b], geoms)
+            for a, b in zip(cuts, cuts[1:])
+        ]
+        np.testing.assert_array_equal(np.concatenate(parts), exp)
+
+    def test_no_polygon_pairs(self):
+        geoms = [g.parse_wkt(self.WKT[0])]
+        got = g.points_in_polygons_np(np.array([1.0, 2.0]), np.array([1.0, 2.0]),
+                                      np.array([-1, -1]), geoms)
+        np.testing.assert_array_equal(got, [-1, -1])
+        got = g.points_in_polygons_np(np.array([1.0]), np.array([1.0]), np.array([-1]), [])
+        np.testing.assert_array_equal(got, [-1])
+        assert len(g.points_in_polygons_np(np.empty(0), np.empty(0),
+                                           np.empty(0, dtype=int), geoms)) == 0
+
+    def test_many_polygons_cost_no_more_than_a_multiple_of_one(self):
+        """20,000 pairs over 500 distinct 24-vertex stars against the same
+        pairs on one star.  A loop that rescans the batch per polygon reads
+        ~80x here; the ring-major sweep reads ~4x."""
+        rng = np.random.default_rng(3)
+        n, n_poly = 20_000, 500
+        geoms = []
+        for i in range(n_poly):
+            theta = np.arange(24) * (np.pi / 12) + rng.uniform(0, 2 * np.pi)
+            r = np.where(np.arange(24) % 2 == 0, 1.0, 0.5)
+            xs = np.round(3.0 * i + r * np.cos(theta), 6)
+            ys = np.round(r * np.sin(theta), 6)
+            body = ",".join(f"{x} {y}" for x, y in zip(xs, ys))
+            geoms.append(g.parse_wkt(f"POLYGON(({body},{xs[0]} {ys[0]}))"))
+        codes = rng.integers(0, n_poly, n)
+        px = 3.0 * codes + rng.uniform(-1.1, 1.1, n)
+        py = rng.uniform(-1.1, 1.1, n)
+        one = np.zeros(n, dtype=np.intp)
+
+        def best(c):
+            ts = []
+            for _ in range(5):
+                t0 = time.perf_counter()
+                g.points_in_polygons_np(px, py, c, geoms)
+                ts.append(time.perf_counter() - t0)
+            return min(ts)
+
+        many_s, one_s = best(codes), best(one)
+        assert many_s <= 25 * one_s, (many_s, one_s)
 
 
 class TestCentroid:

@@ -7,7 +7,11 @@ Two kernels:
   ``Geodesic.WGS84.Inverse(...).s12`` distances (SpatialJoin.scala:32-40) to
   sub-millimeter at the scales covered by the reference's pinned goldens
   (15689 m / 15685 m, BroadcastSpatialJoinTest.scala:115-119 — verified in
-  tests/test_geodesic.py).  Runs executor-side inside an Arrow pandas_udf.
+  tests/test_units.py::TestGeodesic).  Runs executor-side, inside the
+  broadcast-kNN ``mapInPandas`` kernel (a rows × R distance matrix per
+  chunk) and inside the Arrow pandas_udf of :func:`geodesic_distance_udf`.
+  Each pair iterates only until it converges itself, so one near-antipodal
+  pair costs its own iterations, not its whole chunk's.
 - ``haversine_expr`` — great-circle distance as a pure Spark Column
   expression (mean-earth radius).  Stays entirely inside whole-stage
   codegen; used for the engine's own large-scale queries where ~0.3%
@@ -31,56 +35,125 @@ _B = (1.0 - _F) * _A
 EARTH_RADIUS_M = 6371008.8
 
 
+#: pairs per block in the first iterations.  Each temporary is then 64 KB,
+#: which the allocator reuses from its free lists; the 1 MB temporaries of
+#: a whole 125k-pair kNN chunk are mapped and page-faulted afresh on every
+#: call (10,880 minor faults per call with whole-chunk arrays, ~1,800 in
+#: blocks, on a clean chunk of 125 × 1,000 regional points)
+_BLOCK = 8192
+#: iterations each block runs before its still-open pairs are pooled with
+#: the other blocks'; of 200,000 random global pairs, 118 were still open
+#: after 10 iterations and 2 at the cap of 200
+_BLOCK_ITERATIONS = 10
+
+
 def vincenty_np(lon1, lat1, lon2, lat2, iterations: int = 200, tol: float = 1e-13):
     """Vectorized Vincenty inverse: geodesic distance in meters (float64).
 
-    Inputs are array-like degrees.  Non-convergent (near-antipodal) pairs —
-    which cannot occur in the reference's test envelope — fall back to the
-    spherical haversine value.  Coincident points return 0.
+    Inputs are array-like degrees that broadcast together; the result has
+    their broadcast shape (a 0-d array for scalar inputs).  Each pair stops
+    iterating at its own first ``|Δλ| < tol``, so a pair's distance does not
+    depend on the other pairs in the call, and a pair that never converges
+    costs its own ``iterations`` steps, not everyone's.  Pairs still open
+    at the cap (near-antipodal ones, which cannot occur in the reference's
+    test envelope) fall back to the spherical haversine value.  A pair with
+    a non-finite input never enters the loop and returns NaN.  Coincident
+    points return 0.
     """
-    lon1 = np.asarray(lon1, dtype=np.float64)
-    lat1 = np.asarray(lat1, dtype=np.float64)
-    lon2 = np.asarray(lon2, dtype=np.float64)
-    lat2 = np.asarray(lat2, dtype=np.float64)
+    lon1, lat1, lon2, lat2 = (
+        np.asarray(a, dtype=np.float64) for a in (lon1, lat1, lon2, lat2)
+    )
+    shape = np.broadcast_shapes(lon1.shape, lat1.shape, lon2.shape, lat2.shape)
+    dist = np.full(shape, np.nan).ravel()
 
-    rlon1, rlat1, rlon2, rlat2 = map(np.radians, (lon1, lat1, lon2, lat2))
-    U1 = np.arctan((1.0 - _F) * np.tan(rlat1))
-    U2 = np.arctan((1.0 - _F) * np.tan(rlat2))
-    L = rlon2 - rlon1
-    sinU1, cosU1 = np.sin(U1), np.cos(U1)
-    sinU2, cosU2 = np.sin(U2), np.cos(U2)
+    # prologue on the operands' own shapes: the kNN kernel passes (rows, 1)
+    # against (1, R), so this trig runs on rows + R values, not rows × R
+    with np.errstate(invalid="ignore"):  # non-finite inputs: NaN, below
+        U1 = np.arctan((1.0 - _F) * np.tan(np.radians(lat1)))
+        U2 = np.arctan((1.0 - _F) * np.tan(np.radians(lat2)))
+        L = np.radians(lon2) - np.radians(lon1)
+    ops = [
+        np.broadcast_to(a, shape).ravel()
+        for a in (L, np.sin(U1), np.cos(U1), np.sin(U2), np.cos(U2))
+    ]
+    finite = np.isfinite(lon1) & np.isfinite(lat1) & np.isfinite(lon2) & np.isfinite(lat2)
+    pos = np.flatnonzero(np.broadcast_to(finite, shape))
 
-    lam = L.copy()
-    converged = np.zeros(lam.shape, dtype=bool)
-    sins = np.zeros_like(lam)
-    coss = np.ones_like(lam)
-    sig = np.zeros_like(lam)
-    cos2a = np.ones_like(lam)
-    cos2sm = np.zeros_like(lam)
+    # the first iterations block by block, then the pairs still open in all
+    # blocks together; every pair gets the same iterations either way
+    first = min(iterations, _BLOCK_ITERATIONS)
+    parts = []
+    for s in range(0, pos.size, _BLOCK):
+        block = pos[s : s + _BLOCK]
+        block_ops = [a[block] for a in ops]
+        parts.append(_converge(dist, block, block_ops[0], block_ops, first, tol))
+    if parts:
+        pos, lam, *ops = (np.concatenate(c) for c in zip(*parts))
+        pos, lam, *ops = _converge(dist, pos, lam, ops, iterations - first, tol)
 
+    if pos.size:
+        dist[pos] = haversine_np(
+            *(np.broadcast_to(a, shape).ravel()[pos] for a in (lon1, lat1, lon2, lat2))
+        )
+    return dist.reshape(shape)
+
+
+def _converge(dist, pos, lam, ops, iterations, tol):
+    """Iterate the working set (flat positions ``pos``, current λ and the
+    per-pair operands ``ops``) for up to ``iterations`` steps.  Each pair's
+    distance goes to ``dist`` from the iteration it first converges in;
+    once at least half the set has converged, the rest are gathered into
+    a smaller set, so the fully open first iterations pay no gather.
+    Returns ``(pos, lam, *ops)`` of the pairs still open."""
+    live = np.ones(pos.size, dtype=bool)
+    n_live = pos.size
     for _ in range(iterations):
-        sinlam, coslam = np.sin(lam), np.cos(lam)
-        sins = np.sqrt(
-            (cosU2 * sinlam) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * coslam) ** 2
-        )
-        coss = sinU1 * sinU2 + cosU1 * cosU2 * coslam
-        sig = np.arctan2(sins, coss)
-        safe_sins = np.where(sins == 0.0, 1.0, sins)
-        sina = np.where(sins == 0.0, 0.0, cosU1 * cosU2 * sinlam / safe_sins)
-        cos2a = 1.0 - sina**2
-        safe_cos2a = np.where(cos2a == 0.0, 1.0, cos2a)
-        cos2sm = np.where(
-            cos2a == 0.0, 0.0, coss - 2.0 * sinU1 * sinU2 / safe_cos2a
-        )
-        C = _F / 16.0 * cos2a * (4.0 + _F * (4.0 - 3.0 * cos2a))
-        lam_new = L + (1.0 - C) * _F * sina * (
-            sig + C * sins * (cos2sm + C * coss * (-1.0 + 2.0 * cos2sm**2))
-        )
-        converged = np.abs(lam_new - lam) < tol
-        lam = lam_new
-        if np.all(converged):
+        if n_live == 0:
             break
+        lam_new, *terms = _vincenty_step(lam, *ops)
+        done = np.abs(lam_new - lam) < tol
+        done &= live
+        lam = lam_new
+        n_done = np.count_nonzero(done)
+        if n_done == 0:
+            continue
+        dist[pos[done]] = _vincenty_distance(*(t[done] for t in terms))
+        live &= ~done
+        n_live -= n_done
+        if n_live <= live.size // 2:
+            pos, lam, ops = pos[live], lam[live], [a[live] for a in ops]
+            live = np.ones(n_live, dtype=bool)
+    return (pos[live], lam[live], *(a[live] for a in ops))
 
+
+def _vincenty_step(lam, L, sinU1, cosU1, sinU2, cosU2):
+    """One iteration of Vincenty's λ recurrence: the new λ and the
+    auxiliary-sphere terms of the distance series."""
+    sinlam, coslam = np.sin(lam), np.cos(lam)
+    sins = np.sqrt(
+        (cosU2 * sinlam) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * coslam) ** 2
+    )
+    coss = sinU1 * sinU2 + cosU1 * cosU2 * coslam
+    sig = np.arctan2(sins, coss)
+    coincident = sins == 0.0
+    sina = np.where(
+        coincident, 0.0, cosU1 * cosU2 * sinlam / np.where(coincident, 1.0, sins)
+    )
+    cos2a = 1.0 - sina**2
+    equatorial = cos2a == 0.0
+    cos2sm = np.where(
+        equatorial, 0.0, coss - 2.0 * sinU1 * sinU2 / np.where(equatorial, 1.0, cos2a)
+    )
+    C = _F / 16.0 * cos2a * (4.0 + _F * (4.0 - 3.0 * cos2a))
+    lam_new = L + (1.0 - C) * _F * sina * (
+        sig + C * sins * (cos2sm + C * coss * (-1.0 + 2.0 * cos2sm**2))
+    )
+    return lam_new, sins, coss, sig, cos2a, cos2sm
+
+
+def _vincenty_distance(sins, coss, sig, cos2a, cos2sm):
+    """Vincenty's closing series: the geodesic length from a converged
+    iteration's auxiliary-sphere terms."""
     u2 = cos2a * (_A**2 - _B**2) / _B**2
     A = 1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2)))
     B = u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2)))
@@ -93,12 +166,8 @@ def vincenty_np(lon1, lat1, lon2, lat2, iterations: int = 200, tol: float = 1e-1
             - B / 6.0 * cos2sm * (-3.0 + 4.0 * sins**2) * (-3.0 + 4.0 * cos2sm**2)
         )
     )
-    dist = _B * A * (sig - dsig)
-
-    # coincident points: sins == 0 on first pass → sig == 0 → dist == 0 (fine)
-    if not np.all(converged):
-        dist = np.where(converged, dist, haversine_np(lon1, lat1, lon2, lat2))
-    return dist
+    # coincident points: sins == 0 → sig == 0 → 0
+    return _B * A * (sig - dsig)
 
 
 def haversine_np(lon1, lat1, lon2, lat2):

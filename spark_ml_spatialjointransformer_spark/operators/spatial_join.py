@@ -268,8 +268,8 @@ def _prepare_side(
     need_wkt: bool,
 ) -> DataFrame:
     """Attach internal geometry columns (``__sjt_{tag}_*``) and drop rows
-    with null geometry.  All bbox math is JVM-side; only WKT centroids use a
-    pandas_udf."""
+    with null geometry or non-finite point coordinates.  All bbox math is
+    JVM-side; only WKT centroids use a pandas_udf."""
     gx, gy = f"__sjt_{tag}_gx", f"__sjt_{tag}_gy"
     x0, y0, x1, y1 = (f"__sjt_{tag}_{c}" for c in ("x0", "y0", "x1", "y1"))
     wktc = f"__sjt_{tag}_wkt"
@@ -277,8 +277,13 @@ def _prepare_side(
     if not side.is_wkt:
         lon = F.col(side.point_columns.lon).cast("double")
         lat = F.col(side.point_columns.lat).cast("double")
-        # lenient coercion parity: DatasetGeometry.scala:90-96,105-107
-        df = df.where(lon.isNotNull() & lat.isNotNull())
+        # lenient coercion parity: DatasetGeometry.scala:90-96,105-107.
+        # NaN and ±inf are no location either: their distances are NaN, and
+        # the kNN kernel's argmin would pick one as every row's nearest
+        def finite(c):
+            return c.isNotNull() & ~F.isnan(c) & (F.abs(c) != float("inf"))
+
+        df = df.where(finite(lon) & finite(lat))
         if need_centroid:
             df = df.withColumns({gx: lon, gy: lat})
         if need_bbox:
@@ -1234,8 +1239,12 @@ def _broadcast_knn(
     # haversine chain allocates ~8 full-size temporaries, and at 8M cells
     # (64 MB each) every op round-trips DRAM — measured r6: 8M-cell chunks
     # ran the same task 5x slower than 1M-cell chunks (6.5 s vs 1.3 s for
-    # 11.7M pairs; vincenty's iterated temporaries: 76 s at 2M vs 45 s at
-    # 125k cells).
+    # 11.7M pairs).  vincenty_np stops each pair at its own convergence, so
+    # a near-antipodal pair no longer holds its whole chunk to the cap: 960
+    # rows × 1,000 global points, one near-antipode per ten rows, took
+    # 1.14 / 0.74 / 0.69 / 0.70 / 0.82 s single-thread at 31k / 125k / 500k
+    # / 1M / 2M cells, and a 60-row task 64-75 ms at any of them (4-vCPU
+    # Xeon VM, numpy 1.26).
     max_cells = 125_000 if is_geodesic else 1_000_000
 
     k = plan.k

@@ -924,3 +924,79 @@ def test_tie_break_column_survives_pruning(spark):
     out = spatial_join(cust, supp, plan)
     assert out.count() == cust.count() * 3
     assert "supp_nation" in out.columns and "s_suppkey" not in out.columns
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
+def test_nearest_drops_nan_coordinates(spark, strategy):
+    """A NaN coordinate is no location: before the point sides dropped
+    such rows, the NaN POI won every nearest match (the kNN argmin picks a
+    NaN distance, which then cast to Int.MinValue meters)."""
+    from spark_ml_spatialjointransformer_spark.functions.geodesic import vincenty_np
+
+    nan = float("nan")
+    poi = poi_df(spark, [("1", 10.0, 10.0), ("2", nan, 0.0), ("3", 20.0, 20.0), ("4", 5.0, nan)])
+    inp = input_df(spark, [("i1", 10.01, 10.0), ("i2", 19.99, 20.0), ("i3", nan, 5.0)])
+    t = (
+        make_transformer(poi)
+        .setBroadcast("dataset")
+        .setDistColAlias("dist")
+        .setJoinStrategy(strategy)
+    )
+    got = sorted((r["id"], r["poi_id"], r["dist"]) for r in t.transform(inp).collect())
+    d1 = int(round(float(vincenty_np(10.01, 10.0, 10.0, 10.0))))
+    d2 = int(round(float(vincenty_np(19.99, 20.0, 20.0, 20.0))))
+    assert got == [("i1", "1", d1), ("i2", "3", d2)]
+
+
+def test_within_drops_nan_points(spark):
+    poi = wkt_poi_df(spark, [("z", "POLYGON((0 0, 30 0, 30 30, 0 30, 0 0))")])
+    nan = float("nan")
+    inp = input_df(spark, [("i1", 10.0, 10.0), ("i2", nan, 5.0), ("i3", 5.0, nan)])
+    t = (
+        make_transformer(poi)
+        .setDatasetPoint("")
+        .setDatasetWKT("wkt")
+        .setBroadcast("dataset")
+        .setPredicate("within")
+    )
+    assert collect_sorted(t.transform(inp)) == [("i1", 10.0, 10.0, "z")]
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
+def test_nearest_geodesic_matches_brute_force_with_antipodes(spark, strategy):
+    """Global POIs and inputs, one in three inputs planted within 0.05° of
+    a POI's antipode (pairs Vincenty cannot converge on).  Every match is
+    the brute-force argmin of ``vincenty_np`` over all POIs, and its
+    distance the rounded per-pair value."""
+    import numpy as np
+
+    from spark_ml_spatialjointransformer_spark.functions.geodesic import (
+        haversine_np,
+        vincenty_np,
+    )
+
+    rng = np.random.default_rng(21)
+    p_lon, p_lat = rng.uniform(-180, 180, 60), rng.uniform(-70, 70, 60)
+    i_lon, i_lat = rng.uniform(-180, 180, 30), rng.uniform(-70, 70, 30)
+    planted = np.arange(0, 30, 3)
+    i_lon[planted] = (p_lon[planted] + 360.0) % 360.0 - 180.0 + rng.uniform(-0.05, 0.05, 10)
+    i_lat[planted] = -p_lat[planted] + rng.uniform(-0.05, 0.05, 10)
+    poi = poi_df(spark, [(f"p{j}", float(x), float(y)) for j, (x, y) in enumerate(zip(p_lon, p_lat))])
+    inp = input_df(spark, [(f"i{j}", float(x), float(y)) for j, (x, y) in enumerate(zip(i_lon, i_lat))])
+    t = (
+        make_transformer(poi)
+        .setBroadcast("dataset")
+        .setDistColAlias("dist")
+        .setJoinStrategy(strategy)
+    )
+    got = {r["id"]: (r["poi_id"], r["dist"]) for r in t.transform(inp).collect()}
+
+    want = {}
+    for j in range(30):
+        d = vincenty_np(i_lon[j], i_lat[j], p_lon, p_lat)
+        m = int(np.argmin(d))
+        want[f"i{j}"] = (f"p{m}", int(np.round(d[m])))
+    assert got == want
+    # the planted pairs really stay open at the cap: they fall back
+    anti = (i_lon[planted], i_lat[planted], p_lon[planted], p_lat[planted])
+    assert np.array_equal(vincenty_np(*anti), haversine_np(*anti))

@@ -105,6 +105,171 @@ class TestGeodesic:
         d = float(vincenty_np(0.0, 0.0, 179.9, 0.3))
         assert 19_000_000 < d < 20_100_000
 
+    @staticmethod
+    def _whole_array_loop(lon1, lat1, lon2, lat2, iterations=200, tol=1e-13):
+        """Reference: the earlier kernel, which iterated the whole array
+        until every pair converged.  Returns (distance, converged)."""
+        from spark_ml_spatialjointransformer_spark.functions.geodesic import (
+            _A,
+            _B,
+            _F,
+        )
+
+        rlon1, rlat1, rlon2, rlat2 = map(np.radians, (lon1, lat1, lon2, lat2))
+        U1 = np.arctan((1.0 - _F) * np.tan(rlat1))
+        U2 = np.arctan((1.0 - _F) * np.tan(rlat2))
+        L = rlon2 - rlon1
+        sinU1, cosU1, sinU2, cosU2 = np.sin(U1), np.cos(U1), np.sin(U2), np.cos(U2)
+        lam = L.copy()
+        for _ in range(iterations):
+            sinlam, coslam = np.sin(lam), np.cos(lam)
+            sins = np.sqrt(
+                (cosU2 * sinlam) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * coslam) ** 2
+            )
+            coss = sinU1 * sinU2 + cosU1 * cosU2 * coslam
+            sig = np.arctan2(sins, coss)
+            safe_sins = np.where(sins == 0.0, 1.0, sins)
+            sina = np.where(sins == 0.0, 0.0, cosU1 * cosU2 * sinlam / safe_sins)
+            cos2a = 1.0 - sina**2
+            safe_cos2a = np.where(cos2a == 0.0, 1.0, cos2a)
+            cos2sm = np.where(cos2a == 0.0, 0.0, coss - 2.0 * sinU1 * sinU2 / safe_cos2a)
+            C = _F / 16.0 * cos2a * (4.0 + _F * (4.0 - 3.0 * cos2a))
+            lam_new = L + (1.0 - C) * _F * sina * (
+                sig + C * sins * (cos2sm + C * coss * (-1.0 + 2.0 * cos2sm**2))
+            )
+            converged = np.abs(lam_new - lam) < tol
+            lam = lam_new
+            if np.all(converged):
+                break
+        u2 = cos2a * (_A**2 - _B**2) / _B**2
+        A = 1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2)))
+        B = u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2)))
+        dsig = B * sins * (
+            cos2sm
+            + B / 4.0 * (
+                coss * (-1.0 + 2.0 * cos2sm**2)
+                - B / 6.0 * cos2sm * (-3.0 + 4.0 * sins**2) * (-3.0 + 4.0 * cos2sm**2)
+            )
+        )
+        dist = _B * A * (sig - dsig)
+        return np.where(converged, dist, haversine_np(lon1, lat1, lon2, lat2)), converged
+
+    @staticmethod
+    def _stress_pairs(n=20_000, seed=7):
+        """Seeded pairs in five equal kinds: random, near-antipodal (within
+        0.6 degrees of the antipode), coincident, both on the equator
+        (cos²α = 0) and polar (one end within a degree of a pole)."""
+        rng = np.random.default_rng(seed)
+        lon1 = rng.uniform(-180.0, 180.0, n)
+        lat1 = rng.uniform(-89.0, 89.0, n)
+        lon2 = rng.uniform(-180.0, 180.0, n)
+        lat2 = rng.uniform(-89.0, 89.0, n)
+        k = n // 5
+        anti, same, equator, polar = (slice(i * k, (i + 1) * k) for i in range(1, 5))
+        lon2[anti] = (lon1[anti] + 360.0) % 360.0 - 180.0 + rng.uniform(-0.6, 0.6, k)
+        lat2[anti] = -lat1[anti] + rng.uniform(-0.6, 0.6, k)
+        lon2[same], lat2[same] = lon1[same], lat1[same]
+        lat1[equator] = lat2[equator] = 0.0
+        lat1[polar] = rng.choice([-1.0, 1.0], k) * rng.uniform(89.0, 90.0, k)
+        lat1[polar.start : polar.start + 20] = 90.0
+        return lon1, lat1, lon2, lat2
+
+    @pytest.mark.parametrize("iterations", [4, 10, 11, 200])
+    def test_parity_with_whole_array_loop(self, iterations):
+        pairs = self._stress_pairs()
+        got = vincenty_np(*pairs, iterations=iterations)
+        want, converged = self._whole_array_loop(*pairs, iterations=iterations)
+        hav = haversine_np(*pairs)
+        # the same pairs fall back to haversine (and only those: a
+        # converged pair's Vincenty value differs from its haversine one,
+        # except coincident points, where both are 0)
+        if iterations == 200:
+            assert 500 < np.count_nonzero(~converged) < 4_000
+        assert np.array_equal(got[~converged], hav[~converged])
+        assert np.all((got != hav)[converged & (hav != 0.0)])
+        assert np.all(np.isfinite(got))
+        assert np.max(np.abs(got - want)) <= 1e-3  # 1 mm
+
+    def test_pair_result_independent_of_batch(self):
+        pairs = self._stress_pairs()
+        batch = vincenty_np(*pairs)
+        rng = np.random.default_rng(1)
+        # alone, as a scalar call and as a one-element array
+        for i in rng.choice(len(batch), 200, replace=False):
+            one = [float(a[i]) for a in pairs]
+            assert vincenty_np(*one) == batch[i]
+            assert vincenty_np(*([v] for v in one))[0] == batch[i]
+        # reversed, and in uneven pieces
+        assert np.array_equal(vincenty_np(*(a[::-1] for a in pairs))[::-1], batch)
+        cuts = [0, 1, 17, 5_000, 5_003, 12_345, len(batch)]
+        pieces = [vincenty_np(*(a[s:e] for a in pairs)) for s, e in zip(cuts, cuts[1:])]
+        assert np.array_equal(np.concatenate(pieces), batch)
+
+    def test_shape_contract(self):
+        d = vincenty_np(1.0, 1.0, 1.1, 1.1)
+        assert isinstance(d, np.ndarray) and d.shape == () and d.dtype == np.float64
+        rng = np.random.default_rng(3)
+        rl, ra = rng.uniform(-10, 10, 125), rng.uniform(40, 50, 125)
+        pl, pa = rng.uniform(-10, 10, 1000), rng.uniform(40, 50, 1000)
+        m = vincenty_np(rl[:, None], ra[:, None], pl[None, :], pa[None, :])
+        assert m.shape == (125, 1000) and m.dtype == np.float64
+        flat = vincenty_np(np.repeat(rl, 1000), np.repeat(ra, 1000), np.tile(pl, 125), np.tile(pa, 125))
+        assert np.array_equal(m.ravel(), flat)
+        assert vincenty_np([], [], [], []).shape == (0,)
+
+    def test_non_finite_pair_is_nan(self):
+        lon1 = np.array([1.0, np.nan, 2.0, np.inf, 1.0])
+        lat1 = np.array([1.0, 0.0, 2.0, 0.0, -np.inf])
+        lon2 = np.array([1.1, 1.0, 2.1, 1.0, 1.0])
+        lat2 = np.array([1.1, 1.0, 2.1, 1.0, 1.0])
+        d = vincenty_np(lon1, lat1, lon2, lat2)
+        assert np.isnan(d[[1, 3, 4]]).all()
+        assert np.round(d[[0, 2]]).astype(int).tolist() == [15689, 15685]
+        assert d[0] == vincenty_np(1.0, 1.0, 1.1, 1.1)
+
+    @staticmethod
+    def _best_of(fn, repeats=5):
+        best = math.inf
+        for _ in range(repeats):
+            t0 = time.perf_counter()
+            fn()
+            best = min(best, time.perf_counter() - t0)
+        return best
+
+    def test_cost_guard_one_antipode_in_a_knn_chunk(self):
+        """One near-antipodal pair in a 125 × 1,000 chunk, the size the kNN
+        kernel computes at once, must not make the chunk iterate as a whole:
+        the whole-array loop took ~35× the clean chunk here, per-pair
+        convergence ~1×."""
+        rng = np.random.default_rng(11)
+        rl, ra = rng.uniform(-10, 10, 125), rng.uniform(40, 50, 125)
+        pl, pa = rng.uniform(-10, 10, 1000), rng.uniform(40, 50, 1000)
+        planted_l, planted_a = rl.copy(), ra.copy()
+        planted_l[0], planted_a[0] = pl[0] - 180.0 + 0.03, -pa[0] + 0.02
+
+        def chunk(lon, lat):
+            return vincenty_np(lon[:, None], lat[:, None], pl[None, :], pa[None, :])
+
+        # the planted pair really never converges: it falls back to haversine
+        assert chunk(planted_l, planted_a)[0, 0] == haversine_np(
+            planted_l[0], planted_a[0], pl[0], pa[0]
+        )
+        clean = self._best_of(lambda: chunk(rl, ra))
+        planted = self._best_of(lambda: chunk(planted_l, planted_a))
+        assert planted <= 3.0 * clean, (planted, clean)
+
+    def test_cost_guard_one_nan_pair(self):
+        """A NaN pair leaves the loop at once; the whole-array loop took
+        ~26× the clean batch here, because NaN never converges."""
+        rng = np.random.default_rng(5)
+        lon1, lon2 = rng.uniform(-10, 10, (2, 10_000))
+        lat1, lat2 = rng.uniform(40, 50, (2, 10_000))
+        with_nan = lat2.copy()
+        with_nan[123] = np.nan
+        clean = self._best_of(lambda: vincenty_np(lon1, lat1, lon2, lat2))
+        nan = self._best_of(lambda: vincenty_np(lon1, lat1, lon2, with_nan))
+        assert nan <= 3.0 * clean, (nan, clean)
+
 
 class TestWktParse:
     def test_point(self):
